@@ -542,18 +542,12 @@ def ngram_jaccard_pairs(
     )
 
 
-def _seeded_hash(col: Column, seed: int, hash_fn: str) -> Column:
-    """Seeded content hash. ``xxhash64`` (default): fastest, JVM-only.
-    ``md5``: hex-string hash both Spark and DuckDB implement identically —
-    the cross-engine-checkable variant (string MIN/odering over lowercase
-    hex is engine-stable), used by the oracled catalog entries."""
-    if hash_fn == "md5":
-        return F.md5(F.concat_ws(":", F.lit(str(seed)), col))
-    return F.xxhash64(col, F.lit(seed))
-
-
 def _seeded_hash_sql(col: str, seed: int, hash_fn: str) -> str:
-    """SQL text of :func:`_seeded_hash` — same tree, one parse."""
+    """SQL text of the seeded content hash of ``col`` (a column name or SQL
+    fragment). ``xxhash64`` (default): fastest, JVM-only. ``md5``:
+    hex-string hash both Spark and DuckDB implement identically — the
+    cross-engine-checkable variant (string MIN/ordering over lowercase
+    hex is engine-stable), used by the oracled catalog entries."""
     if hash_fn == "md5":
         return f"md5(concat_ws(':', '{seed}', {col}))"
     return f"xxhash64({col}, {seed})"
@@ -658,7 +652,7 @@ def _intersect_run_kernel(it):
     spanning batch boundaries reuse the carried (key, sorted A) state.
     Rows only ever map 1:1 (d1, d2, sz1, sz2 pass through; n_inter is
     appended); thresholding stays in integer-domain JVM expressions
-    downstream, identical to the jvm path.
+    downstream.
     """
     import numpy as np
     import pyarrow as pa
@@ -715,22 +709,15 @@ def jaccard_verify_pairs(
     sh: DataFrame,
     id_col: str = "doc_id",
     threshold_e6: int = 800_000,
-    intersect: str = "arrow",
 ) -> DataFrame:
     """Exact-Jaccard verification restricted to candidate (d1, d2) pairs.
 
-    ``sh`` is either the pre-built per-document set frame from
-    ``char_shingle_sets`` — (id, ss array<bigint>), the zero-shuffle
-    scan-side form every internal caller now passes — or, for backward
-    compatibility, exploded distinct (id, shingle) rows
-    (``char_shingles``' contract), which are collected into the same
-    array shape with one object aggregate. Candidates join that narrow
-    (id, array) table on each side and |A∩B| is computed per pair —
-    by default in the run-amortized Arrow kernel
+    ``sh`` is the per-document set frame from ``char_shingle_sets`` —
+    (id, ss array<bigint>), built scan-side with zero shuffle.
+    Candidates join that narrow (id, array) table on each side and
+    |A∩B| is computed per pair in the run-amortized Arrow kernel
     (``_intersect_run_kernel``: each d1's sorted set built once per
-    consecutive run, pairs probed vectorized; ``intersect="jvm"``
-    selects the previous per-pair ``array_intersect``, an O(|A|+|B|)
-    hash probe inside whole-stage codegen, byte-identical output).
+    consecutive run, pairs probed vectorized).
     |A∪B| = |A|+|B|-|A∩B|. Cost is linear in (candidates x doc shingle count)
     WITHOUT materializing exploded (pair, shingle) rows through an
     exchange: the previous explode-then-equi-join shape shuffled
@@ -743,7 +730,7 @@ def jaccard_verify_pairs(
     exploded shape carried per group.
 
     Two deliberate physical choices: (1) shingles are xxhash64'd to int64
-    BEFORE collecting — the intersect probes fixed-width longs instead of
+    in the set frame — the intersect probes fixed-width longs instead of
     strings, and counts are identical modulo 64-bit collisions (~1e-12 for
     realistic per-doc shingle counts; same argument, and same oracle
     compatibility, as ``ngram_jaccard_pairs``' hash_shingles). (2) the
@@ -755,12 +742,7 @@ def jaccard_verify_pairs(
     arrays join in AFTER it (broadcast at small scale), so they are never
     shuffled per candidate.
     """
-    if "ss" in sh.columns:
-        sets = sh.select(id_col, "ss")
-    else:
-        sets = sh.select(
-            F.col(id_col), F.xxhash64("shingle").alias("shingle")
-        ).groupBy(id_col).agg(F.collect_set("shingle").alias("ss"))
+    sets = sh.select(id_col, "ss")
     par = candidates.sparkSession.sparkContext.defaultParallelism
     joined = (
         candidates.repartition(par, "d1", "d2")
@@ -774,34 +756,22 @@ def jaccard_verify_pairs(
             F.least("sz1", "sz2") * F.lit(SCALE) >= F.lit(threshold_e6) * F.greatest("sz1", "sz2")
         )
     )
-    if intersect == "arrow":
-        # run-amortized Arrow kernel (round-11, guide §4): a local sort
-        # on d1 makes same-d1 candidates contiguous within each task (no
-        # exchange — the (d1, d2) repartition above already placed them),
-        # the kernel builds each d1's sorted set once per run and probes
-        # all its pairs vectorized. Same-session paired A/B at sf0.1
-        # (2.85M post-prefilter pairs): JVM 10.7/11.4 s vs Arrow
-        # 5.9/2.9 s min-of-5, outputs byte-identical; q48/x132/x85/x90
-        # stay hash-green. intersect="jvm" keeps the builtin for
-        # array-shape regressions or Arrow-hostile deployments.
-        scored = (
-            joined.sortWithinPartitions("d1")
-            .mapInArrow(
-                _intersect_run_kernel,
-                f"d1 {dict(joined.dtypes)['d1']}, d2 {dict(joined.dtypes)['d2']},"
-                " n_inter int, sz1 int, sz2 int",
-            )
+    # run-amortized Arrow kernel (round-11, guide §4): a local sort on d1
+    # makes same-d1 candidates contiguous within each task (no exchange —
+    # the (d1, d2) repartition above already placed them), the kernel
+    # builds each d1's sorted set once per run and probes all its pairs
+    # vectorized. Same-session paired A/B at sf0.1 (2.85M post-prefilter
+    # pairs) against the per-pair JVM array_intersect it replaced:
+    # 10.7/11.4 s vs 5.9/2.9 s min-of-5, outputs byte-identical;
+    # q48/x132/x85/x90 stay hash-green.
+    scored = (
+        joined.sortWithinPartitions("d1")
+        .mapInArrow(
+            _intersect_run_kernel,
+            f"d1 {dict(joined.dtypes)['d1']}, d2 {dict(joined.dtypes)['d2']},"
+            " n_inter int, sz1 int, sz2 int",
         )
-    elif intersect == "jvm":
-        scored = joined.select(
-            "d1",
-            "d2",
-            F.size(F.array_intersect("ss1", "ss2")).alias("n_inter"),
-            "sz1",
-            "sz2",
-        )
-    else:
-        raise ValueError(f"intersect must be arrow|jvm, got {intersect!r}")
+    )
     return (
         scored.filter(F.col("n_inter") >= 1)
         .withColumn("jaccard_e6", F.expr(f"n_inter * {SCALE} div (sz1 + sz2 - n_inter)"))
@@ -1818,7 +1788,7 @@ def exact_substring_dedup(
     ).select(
         F.col(id_col),
         F.col("pos"),
-        _seeded_hash(F.col("gram"), 0, hash_fn).alias("g"),
+        F.expr(_seeded_hash_sql("gram", 0, hash_fn)).alias("g"),
     )
     w = Window.partitionBy("g").orderBy(F.col(id_col), F.col("pos"))
     dup_windows = grams.withColumn("rn", F.row_number().over(w)).filter(

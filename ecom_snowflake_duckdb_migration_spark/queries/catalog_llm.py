@@ -610,7 +610,7 @@ def _q51_oracle(k: int, dim: int, n_centroids: int, nprobe: int, seed: int = 42)
     "quantizer cells, nprobe nearest cells scored, exact cosine re-rank. "
     "This entry runs the fixed seeded codebook so the whole index + search "
     "is oracle-checked end-to-end (centroids are literals, like q50's "
-    "hyperplanes); the data-adaptive KMeans codebook (train_centroids) is "
+    "hyperplanes); the data-adaptive k-means codebook (train_centroids) is "
     "the production recall path, pinned against exact x46 in tests. "
     "The scale path: persist ivf_partition output bucketed by cell and "
     "probes become partition pruning.",
@@ -1347,7 +1347,7 @@ def _x78_oracle(threshold: float, dim: int, n_centroids: int, seed: int = 42) ->
     "(the paper's diversity-keep rule, id-tiebroken). Complements the "
     "lexical family — minhash (q48) catches copies, SemDeDup catches "
     "paraphrases. Runs the seeded codebook so assignment + sweep are "
-    "oracle-checked end-to-end; the KMeans codebook (train_centroids) is "
+    "oracle-checked end-to-end; the trained k-means codebook (train_centroids) is "
     "the production recall path. Candidates are a self-equi-join on cell — "
     "sum of squared cluster sizes, never n^2; bucketed-by-cell storage "
     "makes it exchange-free.",
@@ -1933,7 +1933,7 @@ _X87_K = 15
     "x87_exact_substring_dedup",
     # DuckDB twin of exact_substring_dedup(k=15, hash_fn="md5"): parallel
     # unnests zip positionally (x81 pattern); the rank key is md5('0:'||
-    # gram) — the _seeded_hash(seed=0) layout both engines produce
+    # gram) — the _seeded_hash_sql(seed=0) layout both engines produce
     # byte-identically; covered positions distinct in a subquery because
     # DISTINCT must apply AFTER the range unnest expands.
     oracle=f"""

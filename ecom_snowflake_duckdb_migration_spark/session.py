@@ -70,14 +70,20 @@ def get_spark(
     # network and spills/shuffles are transient, so RAM-backed local.dir
     # avoids this environment's slow disk path (measured 2x on shuffle-heavy
     # queries). Real-cluster deployments should override spark.local.dir to
-    # fast node-local storage (NVMe) instead.
-    if master.startswith("local") and os.path.isdir("/dev/shm"):
+    # fast node-local storage (NVMe) instead. A caller that sets its own
+    # spark.local.dir gets neither the default nor an empty shm directory.
+    extra_conf = extra_conf or {}
+    if (
+        "spark.local.dir" not in extra_conf
+        and master.startswith("local")
+        and os.path.isdir("/dev/shm")
+    ):
         shm = "/dev/shm/spark-local"
         try:
             os.makedirs(shm, exist_ok=True)
             builder = builder.config("spark.local.dir", shm)
         except OSError:
             pass
-    for key, value in (extra_conf or {}).items():
+    for key, value in extra_conf.items():
         builder = builder.config(key, value)
     return builder.getOrCreate()

@@ -19,6 +19,7 @@ Writes PERF_ANN_RECALL.json.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
@@ -304,6 +305,8 @@ def main() -> int:
         "timing": "probe_sec is min-of-5 warm collects (round-8's "
                   "single-sample timing made host interference read as "
                   "non-monotone probe cost)",
+        "host": {"cpus": os.cpu_count(),
+                 "spark_cores": spark.sparkContext.defaultParallelism},
     }
     with open(out_path, "w") as f:
         json.dump(out, f, indent=1)

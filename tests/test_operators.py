@@ -688,7 +688,7 @@ def test_semantic_dedup_matches_sequential_reference(spark, sf_dir):
 
 
 def test_semantic_dedup_trained_codebook_and_monotonicity(spark, sf_dir):
-    """Production path: KMeans codebook. Higher thresholds keep more rows;
+    """Production path: trained k-means codebook. Higher thresholds keep more rows;
     threshold > max pairwise cosine keeps everything."""
     e = _emb(spark, sf_dir)
     centroids = sim.train_centroids(e, n_centroids=8, seed=42)
@@ -1312,7 +1312,7 @@ def test_ann_ivf_recall_gate(spark):
 
     Committed sf0.1 embeddings (2000 x 64), trained codebook (8 cells,
     seed 42), 50 queries, exact numpy oracle. Measured curve (recall@10):
-    nprobe 1 -> 0.48, 2 -> 0.64, 4 -> 0.81, 6 -> 0.93, 8 -> 1.0. nprobe=4
+    nprobe 2 -> 0.51, 4 -> 0.72, 6 -> 0.91, 8 -> 1.0. nprobe=4
     sits UNDER the 0.9 bar on this geometry (neighbors straddle cell
     boundaries with only 8 cells); 6 is the smallest >= 0.9 here. The
     FAMILY default is calibrated at production geometry instead — see
@@ -1362,9 +1362,12 @@ def test_ann_ivf_recall_gate_production_geometry(spark):
     files are exact duplicates of sf0.1's — recall on them is
     degenerately 1.0 at nprobe=1 — so the set is 10 seeded ~0.82-cosine
     perturbations per committed sf0.1 vector: near-duplicate clusters
-    that straddle cell boundaries). Measured curve (PERF_ANN_RECALL.json):
-    nprobe 1 -> 0.64, 4 -> 0.84, 6 -> 0.88, 8 -> 0.90, 12 -> 0.93,
-    16 -> 0.96. nprobe=8 is the smallest >= 0.9 — the family default.
+    that straddle cell boundaries). The codebook is a pure function of
+    the keys, so the curve is the same at any core count. Measured on
+    this test's 60 queries: nprobe 4 -> 0.84, 8 -> 0.91, 16 -> 0.965;
+    PERF_ANN_RECALL.json's 100-query sweep: 1 -> 0.63, 4 -> 0.81,
+    6 -> 0.87, 8 -> 0.89, 12 -> 0.94, 16 -> 0.96. nprobe=8 is the
+    smallest >= 0.9 on this query set — the family default.
     Also exercises the pandas (numpy-kernel) assignment path end-to-end:
     at >16 cells knn_join auto-dispatches to it (the expression path
     measured 90 s vs < 5 s here)."""
@@ -2567,12 +2570,41 @@ def test_pq_trained_codebooks_beat_seeded_recall(spark, sf_dir):
     assert r_t > r_s, (r_t, r_s)
 
 
+def test_lloyd_matmul_distance_matches_broadcast_reference():
+    """The k-means kernel's ||x||^2 - 2x.C^T + ||c||^2 distance step trains
+    the same codebooks as the direct broadcast (x - c)^2 sum, which is kept
+    here as the reference: only the argmin (and the farthest-point respawn)
+    reads the distances, and these seeded inputs have no near-ties."""
+    import numpy as np
+
+    def reference(X, m, k, seed, iters):
+        dsub = X.shape[1] // m
+        rng = np.random.RandomState(seed)
+        books = []
+        for s in range(m):
+            Xs = X[:, s * dsub : (s + 1) * dsub]
+            C = Xs[rng.choice(len(Xs), size=k, replace=False)].copy()
+            for _ in range(iters):
+                d2 = ((Xs[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+                assign = d2.argmin(axis=1)
+                for j in range(k):
+                    mask = assign == j
+                    C[j] = Xs[mask].mean(axis=0) if mask.any() else Xs[d2.min(axis=1).argmax()]
+            books.append(C.tolist())
+        return books
+
+    X = np.random.RandomState(5).standard_normal((600, 16)) * 3.0
+    for m, k in ((1, 32), (2, 8), (4, 16)):
+        assert sim._lloyd_pq(X, m, k, 42, 15) == reference(X, m, k, 42, 15), (m, k)
+
+
 def test_codebook_training_sample_is_layout_invariant(spark):
     """The quantizer training sample is a pure function of the keys
     (deterministic hash rank), NOT of physical layout: a source-sorted
     corpus and a shuffled/re-partitioned one train bit-identical PQ
-    codebooks and KMeans centroids — the head-limit bias a clustered
-    corpus would otherwise inject (judge round-9 finding) cannot occur."""
+    codebooks and IVF centroids, with an explicit sample_n and on the
+    default path — the head-limit bias a clustered corpus would otherwise
+    inject (judge round-9 finding) cannot occur."""
     import numpy as np
 
     rng = np.random.RandomState(11)
@@ -2592,6 +2624,9 @@ def test_codebook_training_sample_is_layout_invariant(spark):
     c1 = sim.train_centroids(sorted_df, 4, seed=3, sample_n=50)
     c2 = sim.train_centroids(shuffled_df, 4, seed=3, sample_n=50)
     assert c1 == c2
+    assert sim.train_centroids(sorted_df, 4, seed=3) == sim.train_centroids(
+        shuffled_df, 4, seed=3
+    )
     # and the hash sample genuinely mixes domains (a head limit would
     # have taken domain A only)
     sampled = sim._codebook_sample_rows(sorted_df, "embedding", 50, "vec_id", 3)
@@ -3092,7 +3127,7 @@ def test_minhash_signatures_scan_side_equals_grouped_reference(spark):
     for hash_fn in ("xxhash64", "md5"):
         sh = tx.char_shingles(d)
         aggs = [
-            F.min(tx._seeded_hash(F.col("shingle"), s, hash_fn)).alias(f"mh_{s}")
+            F.min(F.expr(tx._seeded_hash_sql("shingle", s, hash_fn))).alias(f"mh_{s}")
             for s in range(8)
         ]
         ref = sh.groupBy("doc_id").agg(*aggs)
